@@ -3,19 +3,19 @@
 
     python3 perfbench/run.py --workload er_uniform --seed 7 --seconds 8 --trace 0
 
-Run it from the repository root. One driver process on ``local[4]``
+Run it from the repository root. One driver process on ``local[2]``
 drives a closed loop, one job at a time:
 
 1. set-up: start the session, then ``SETUP_REPS`` times generate the
-   corpus in-process with ``corpus.spark_corpus(..., seed=<seed>)`` and
-   write the documents to parquet;
+   corpus in-process with ``corpus.spark_corpus(..., seed=<seed>)``, its
+   hot block cut to a fixed size, and write the documents to parquet;
 2. the cold job: documents parquet -> ``pipeline.run_pipeline`` ->
    clusters parquet, the first job of the fresh session;
-3. the oracle gate on a small corpus slice, then warm repeats of the job
-   for ``--seconds`` (at least ``MIN_WARM_JOBS``; the first is a warm-up
-   and stays out of the median);
-4. the other correctness checks, and B3 / pairwise F1 against the gold
-   partition.
+3. warm repeats of the job for ``--seconds`` (at least
+   ``MIN_WARM_JOBS``), with the oracle gate on a small corpus slice, the
+   documents check and B3 / pairwise F1 against the gold partition run
+   between them;
+4. the other correctness checks.
 
 ``--trace 1`` adds, after step 3, one documents -> clusters job and one
 ``operators.feedback.run_feedback_loop`` under ``tracing.Tracer``, which
@@ -58,17 +58,23 @@ from ent_res_feedback_spark.session import get_spark  # noqa: E402
 import checks  # noqa: E402
 import tracing  # noqa: E402
 
-# The two corpora differ only in the hot block: same entity count, so the
-# same per-doc work, and a hot block above the salt threshold in er_hot
-# only, so the pair path does several times more work there.
+# The two corpora differ only in the hot block: about the same doc count,
+# so the same per-doc work, and a hot block above the salt threshold in
+# er_hot only, so the pair path does several times more work there. The
+# hot block is cut to ``hot_docs`` docs: as generated, its size is a sum of
+# random per-entity doc counts, and its pairs, which grow with its square,
+# varied 2x from one seed to the next.
 WORKLOADS = {
-    "er_uniform": {"entities": 1000, "hot_entities": 12},
-    "er_hot": {"entities": 1000, "hot_entities": 30},
+    "er_uniform": {"entities": 1000, "hot_entities": 20, "hot_docs": 260},
+    "er_hot": {"entities": 1000, "hot_entities": 45, "hot_docs": 640},
 }
 #: one engine configuration for every workload: 400 salts er_hot's hot
-#: block (~660 docs) and no block of er_uniform (hot block ~260 docs)
+#: block and no block of er_uniform
 CONFIG = ERConfig(salt_threshold=400)
-CORES = 4
+#: two task slots, each with its Python worker, on a 4-core host: with
+#: local[4] the task threads, their Python workers and the driver's JIT
+#: and GC threads outnumber the cores, and every job ran slower
+CORES = 2
 SETUP_REPS = 3
 MIN_WARM_JOBS = 4
 FEEDBACK_ROUNDS = 2
@@ -146,6 +152,7 @@ class Bench:
         self.events = os.path.join(self.work, "events")
         self.ledger = Ledger()
         self.samples: dict = {}
+        self.cut: list = []  # hot-block doc_ids left out of the corpus
         self.steal: list = []
         self.digests: list = []
         self.record: dict = {}
@@ -202,11 +209,27 @@ class Bench:
 
     # -- units of work ---------------------------------------------------
 
-    def corpus(self):
+    def generate(self):
         return spark_corpus(
             self.spark, self.spec["entities"],
             hot_block_entities=self.spec["hot_entities"], seed=self.seed,
         )
+
+    def hot_cut(self) -> list:
+        """doc_ids of the hot block past its first ``hot_docs`` docs by
+        doc_id (whole entities, then part of one)."""
+        gold = self.generate()[1]
+        # spark_corpus labels entity i "e<i>"; entities below hot_entities
+        # make up the hot block
+        entity = F.substring("cluster_id", 2, 12).cast("int")
+        return [r[0] for r in gold.where(entity < self.spec["hot_entities"])
+                .select("doc_id").orderBy("doc_id").offset(self.spec["hot_docs"]).collect()]
+
+    def corpus(self):
+        """documents and gold, the hot block cut to its fixed size"""
+        keep = ~F.col("doc_id").isin(self.cut)
+        docs, gold = self.generate()
+        return docs.where(keep), gold.where(keep)
 
     def set_up(self):
         self.corpus()[0].write.mode("overwrite").parquet(self.docs_path)
@@ -304,11 +327,13 @@ class Bench:
         self.record["oracle_slice_f1"] = f1
         return int(f1 < checks.ORACLE_F1_GATE)
 
+    def document_check(self) -> None:
+        spark = self.spark
+        self.ledger.check("every doc once, spans unchanged", lambda: checks.document_problems(
+            spark.read.parquet(self.docs_path), spark.read.parquet(self.out_path)))
+
     def run_checks(self, job_edges, fb_result) -> None:
-        spark, ledger = self.spark, self.ledger
-        docs = spark.read.parquet(self.docs_path)
-        ledger.check("every doc once, spans unchanged", lambda: checks.document_problems(
-            docs, spark.read.parquet(self.out_path)))
+        ledger = self.ledger
         if job_edges is not None:
             ledger.check("clusters = closure of the job's tau-edges",
                          lambda: checks.closure_mismatches(
@@ -342,6 +367,9 @@ class Bench:
         session_s = time.perf_counter() - t0
         self.mark("session")
         try:
+            # the cut shapes the workload; it is the benchmark's, not set-up
+            self.cut = self.hot_cut()
+            self.mark("hot block cut")
             reps = [self.timed(f"set-up {i}", self.set_up) for i in range(SETUP_REPS)]
             self.samples["setup_s"] = [session_s + r for r in reps if r is not None]
             # the gold partition is the benchmark's answer key, not user set-up
@@ -354,9 +382,14 @@ class Bench:
             if cold is not None:
                 self.samples["cold_job_s"] = [cold]
                 self.digest("cold job", self.out_path)
-            # the gate runs the same pipeline on a small slice, so it also
-            # takes part of the JIT warm-up of the warm jobs
-            self.ledger.check("pairwise F1 vs oracle >= 0.99", self.oracle_gate)
+            # The untimed units run between the warm jobs, so the samples
+            # span more of the run and a short host slowdown (the host's
+            # speed drifts by ~15% over 5-30 s) touches fewer of them.
+            between = [
+                lambda: self.ledger.check("pairwise F1 vs oracle >= 0.99", self.oracle_gate),
+                self.document_check,
+                self.quality,
+            ]
             warm: list = []
             t_warm = time.perf_counter()
             while len(warm) < MIN_WARM_JOBS or time.perf_counter() - t_warm < self.seconds:
@@ -364,12 +397,11 @@ class Bench:
                 warm.append(self.timed(label, self.er_job))
                 if warm[-1] is not None:
                     self.digest(label, self.out_path)
-            # the first repeat still runs JIT-cold code paths: it is a
-            # recorded warm-up, outside the median
-            self.samples["warm_job_s"] = [w for w in warm[1:] if w is not None]
+                if between:
+                    between.pop(0)()
+            self.samples["warm_job_s"] = [w for w in warm if w is not None]
             self.samples["docs_per_s"] = [n_docs / w for w in self.samples["warm_job_s"]]
-            self.record["warm_up_job_s"] = warm[0]
-            self.mark("cold and warm jobs")
+            self.mark("cold and warm jobs, gate, quality")
 
             job_edges = fb = None
             if self.trace:
@@ -387,8 +419,6 @@ class Bench:
                 self.mark("traced job and feedback")
             self.run_checks(job_edges, fb)
             self.mark("checks")
-            self.quality()
-            self.mark("quality")
             self.record["environment"] = checks.environment(self.spark, self.seed, ROOT)
             self.record["peak_rss_mb"] = checks.peak_rss_mb(self.spark)
         finally:
