@@ -227,9 +227,14 @@ def set_jaccard(a1: Column, a2: Column) -> Column:
     """F11 — reference set ``jaccard`` (s2and/text.py:604-629).
     |intersection|/|union| over array columns (deduped); NULL if either
     side is empty."""
-    a1d, a2d = F.array_distinct(a1), F.array_distinct(a2)
-    score = F.size(F.array_intersect(a1d, a2d)) / F.size(F.array_union(a1d, a2d))
-    return F.when((F.size(a1d) > 0) & (F.size(a2d) > 0), score)
+    return distinct_jaccard(F.array_distinct(a1), F.array_distinct(a2))
+
+
+def distinct_jaccard(a1: Column, a2: Column) -> Column:
+    """``set_jaccard`` over arrays that are already distinct (e.g. derived
+    once per row upstream), without re-deduplicating them per pair."""
+    score = F.size(F.array_intersect(a1, a2)) / F.size(F.array_union(a1, a2))
+    return F.when((F.size(a1) > 0) & (F.size(a2) > 0), score)
 
 
 # ---------------------------------------------------------------------------

@@ -29,16 +29,11 @@ def _starts_with_either(a: Column, b: Column) -> Column:
     return a.startswith(b) | b.startswith(a)
 
 
-def join_seed_constraints(pairs: DataFrame, seeds: DataFrame | None) -> DataFrame:
+def join_seed_constraints(pairs: DataFrame, seeds: DataFrame) -> DataFrame:
     """Broadcast-join seed require/disallow onto the pair frame as columns
     ``seed_require``/``seed_disallow`` (booleans). Also derives the
     cross-seed disallow: both sides seeded into DIFFERENT require-groups
     (reference data.py:837-842)."""
-    if seeds is None:
-        return pairs.withColumn("seed_require", F.lit(False)).withColumn(
-            "seed_disallow", F.lit(False)
-        ).withColumn("cross_seed_disallow", F.lit(False))
-
     canon = seeds.select(
         F.least("doc_id_1", "doc_id_2").alias("doc_id_1"),
         F.greatest("doc_id_1", "doc_id_2").alias("doc_id_2"),
@@ -148,12 +143,10 @@ def load_name_aliases(spark, path: str) -> DataFrame:
     return spark.read.parquet(path).select("name_1", "name_2")
 
 
-def join_alias_flags(pairs: DataFrame, alias_pairs: DataFrame | None) -> DataFrame:
+def join_alias_flags(pairs: DataFrame, alias_pairs: DataFrame) -> DataFrame:
     """Broadcast-join the (small) alias table onto a pair frame as a
     ``known_alias`` boolean over (first_1, first_2), both orientations
     (the reference probes the tuple set both ways, data.py:854-862)."""
-    if alias_pairs is None:
-        return pairs.withColumn("known_alias", F.lit(False))
     canon = (
         alias_pairs.select(F.col("name_1").alias("fa"), F.col("name_2").alias("fb"))
         .unionByName(
@@ -172,11 +165,10 @@ def join_alias_flags(pairs: DataFrame, alias_pairs: DataFrame | None) -> DataFra
     return out.fillna({"known_alias": False})
 
 
-def constraint_distance(
-    alias_pairs: DataFrame | None = None,
-) -> Column:
+def constraint_distance(seeded: bool, aliased: bool) -> Column:
     """The C1 precedence chain as one column expression over a pair frame
-    that already has seed flags and mention fields (_1/_2 suffixed).
+    that has mention fields (_1/_2 suffixed), plus the seed flags when
+    ``seeded`` and ``known_alias`` when ``aliased``.
 
     Order (reference data.py:827-891):
       seed disallow -> 1e4
@@ -187,38 +179,38 @@ def constraint_distance(
       non-prefix & non-alias firsts -> 1e4
       conflicting middle initials -> 1e4
       else NULL (model decides)
+
+    Without seeds the three seed rules are absent rather than tested
+    against constant-false flags; the result is the same.
     """
     f1, f2 = F.col("first_1"), F.col("first_2")
     l1, l2 = F.col("last_1"), F.col("last_2")
-    known_alias = (
-        F.coalesce(F.col("known_alias"), F.lit(False))
-        if alias_pairs is not None
-        else F.lit(False)
-    )
-    return (
-        F.when(F.col("seed_disallow"), F.lit(LARGE_DISTANCE))
-        .when(F.col("seed_require"), F.lit(LOW_DISTANCE))
-        .when(F.col("cross_seed_disallow"), F.lit(LARGE_DISTANCE))
-        .when(l1 != l2, F.lit(LARGE_DISTANCE))
-        .when(
-            (F.length(f1) > 0)
-            & (F.length(f2) > 0)
-            & (F.substring(f1, 1, 1) != F.substring(f2, 1, 1)),
-            F.lit(LARGE_DISTANCE),
-        )
-        .when(
-            (F.length(f1) > 0)
-            & (F.length(f2) > 0)
-            & ~_starts_with_either(f1, f2)
-            & ~known_alias,
-            F.lit(LARGE_DISTANCE),
-        )
-        .when(
-            middle_compatible(F.col("middle_1"), F.col("middle_2")) == 0.0,
-            F.lit(LARGE_DISTANCE),
-        )
-        .otherwise(F.lit(None).cast("double"))
-    )
+    both_first = (F.length(f1) > 0) & (F.length(f2) > 0)
+    non_prefix = both_first & ~_starts_with_either(f1, f2)
+    if aliased:
+        non_prefix = non_prefix & ~F.coalesce(F.col("known_alias"), F.lit(False))
+    rules = []
+    if seeded:
+        rules += [
+            (F.col("seed_disallow"), LARGE_DISTANCE),
+            (F.col("seed_require"), LOW_DISTANCE),
+            (F.col("cross_seed_disallow"), LARGE_DISTANCE),
+        ]
+    rules += [
+        (l1 != l2, LARGE_DISTANCE),
+        (both_first & (F.substring(f1, 1, 1) != F.substring(f2, 1, 1)), LARGE_DISTANCE),
+        (non_prefix, LARGE_DISTANCE),
+        (
+            middle_compatible(F.col("middle_initials_1"), F.col("middle_initials_2"))
+            == 0.0,
+            LARGE_DISTANCE,
+        ),
+    ]
+    (cond, dist), *rest = rules
+    chain = F.when(cond, F.lit(dist))
+    for cond, dist in rest:
+        chain = chain.when(cond, F.lit(dist))
+    return chain.otherwise(F.lit(None).cast("double"))
 
 
 def apply_constraints(
@@ -230,9 +222,10 @@ def apply_constraints(
     expensive featurization and filter the UDF input to
     ``constraint_dist IS NULL`` (the C2 gate). ``alias_pairs`` (S5) turns
     otherwise-disallowed non-prefix first-name pairs back over to the
-    model (reference data.py:854-862)."""
-    with_seeds = join_seed_constraints(pairs, seeds)
-    with_alias = join_alias_flags(with_seeds, alias_pairs)
-    return with_alias.withColumn(
-        "constraint_dist", constraint_distance(alias_pairs)
-    )
+    model (reference data.py:854-862). Without seeds or aliases this is
+    one projection over ``pairs``."""
+    out = pairs if seeds is None else join_seed_constraints(pairs, seeds)
+    if alias_pairs is not None:
+        out = join_alias_flags(out, alias_pairs)
+    dist = constraint_distance(seeded=seeds is not None, aliased=alias_pairs is not None)
+    return out.select("*", dist.alias("constraint_dist"))

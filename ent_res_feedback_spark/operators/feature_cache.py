@@ -18,6 +18,9 @@ The miss count rides the cache-append write as an Observation, so
 callers (and tests) can assert "second run featurized 0 pairs" without
 an extra job. At 100 TB the cache is bucketed by key in production; here
 plain parquet + append, same semantics.
+
+Pair frames from operators/pairs.py are canonical already; ad-hoc callers
+orient theirs with ``canonicalize_pairs`` (re-exported here) first.
 """
 
 from __future__ import annotations
@@ -28,26 +31,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ent_res_feedback_spark.operators.features import FEATURE_COLS
-
-
-def canonicalize_pairs(pairs: DataFrame) -> DataFrame:
-    """Enforce doc_id_1 < doc_id_2 (the cache key orientation). Pair
-    frames from operators/pairs.py are already canonical; this keeps
-    ad-hoc callers safe — swapping ids also swaps every suffixed column."""
-    swapped = F.col("doc_id_1") > F.col("doc_id_2")
-    cols = []
-    for c in pairs.columns:
-        if c.endswith("_1"):
-            cols.append(
-                F.when(swapped, F.col(c[:-2] + "_2")).otherwise(F.col(c)).alias(c)
-            )
-        elif c.endswith("_2"):
-            cols.append(
-                F.when(swapped, F.col(c[:-2] + "_1")).otherwise(F.col(c)).alias(c)
-            )
-        else:
-            cols.append(F.col(c))
-    return pairs.select(*cols)
+from ent_res_feedback_spark.operators.pairs import canonicalize_pairs  # noqa: F401
 
 
 class PairFeatureCache:

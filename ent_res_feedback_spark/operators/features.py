@@ -24,7 +24,7 @@ from ent_res_feedback_spark.functions.strdist import (
     levenshtein_norm,
     prefix_dist,
 )
-from ent_res_feedback_spark.functions.text import set_jaccard
+from ent_res_feedback_spark.functions.text import distinct_jaccard
 from ent_res_feedback_spark.functions.vectors import cosine_sim
 
 NEUTRAL = 0.5  # NULL -> neutral evidence fill (oracle.name_features_py)
@@ -39,26 +39,15 @@ FEATURE_COLS = [
 ]
 
 
-def _initials(middle: Column) -> Column:
-    return F.transform(
-        F.filter(F.split(middle, " "), lambda t: F.length(t) > 0),
-        lambda t: F.substring(t, 1, 1),
-    )
-
-
-def middle_compatible(m1: Column, m2: Column) -> Column:
-    """1.0 when middle names don't conflict: either side empty, or the
-    initial sets overlap (subset of reference data.py:866-890)."""
-    i1, i2 = _initials(m1), _initials(m2)
+def middle_compatible(i1: Column, i2: Column) -> Column:
+    """1.0 when middle names don't conflict: either initial array empty,
+    or the arrays overlap (subset of reference data.py:866-890). Takes the
+    ``middle_initials`` arrays of ``mentions.mention_sets``."""
     return (
         F.when((F.size(i1) == 0) | (F.size(i2) == 0), F.lit(1.0))
         .when(F.arrays_overlap(i1, i2), F.lit(1.0))
         .otherwise(F.lit(0.0))
     )
-
-
-def _tokens(col: Column) -> Column:
-    return F.filter(F.split(col, " "), lambda t: F.length(t) > 0)
 
 
 def mention_pair_features(
@@ -67,7 +56,8 @@ def mention_pair_features(
     with_embedding: bool = False,
 ) -> DataFrame:
     """Adds FEATURE_COLS (+ ``emb_cosine`` when requested) to a pair frame
-    with first/middle/affil_norm columns suffixed _1/_2.
+    with first/middle_initials/affil_tokens columns suffixed _1/_2 (the
+    arrays from ``mentions.mention_sets``).
 
     String-distance features gate on len>1 (reference text.py:363:
     initial-only names carry no distance evidence) and fill NULL->0.5.
@@ -78,7 +68,7 @@ def mention_pair_features(
     jw = F.when(gate, jaro_winkler(f1, f2))
     lev = F.when(gate, 1.0 - levenshtein_norm(f1, f2))
     pref = F.when(gate, 1.0 - prefix_dist(f1, f2))
-    affil = set_jaccard(_tokens(F.col("affil_norm_1")), _tokens(F.col("affil_norm_2")))
+    affil = distinct_jaccard(F.col("affil_tokens_1"), F.col("affil_tokens_2"))
 
     if fill_neutral:
         jw = F.coalesce(jw, F.lit(NEUTRAL))
@@ -91,7 +81,9 @@ def mention_pair_features(
         jw.alias("jw_first"),
         lev.alias("lev_first"),
         pref.alias("prefix_first"),
-        middle_compatible(F.col("middle_1"), F.col("middle_2")).alias("middle_compat"),
+        middle_compatible(
+            F.col("middle_initials_1"), F.col("middle_initials_2")
+        ).alias("middle_compat"),
         affil.alias("affil_jaccard"),
     )
     if with_embedding:

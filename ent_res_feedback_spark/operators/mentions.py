@@ -14,7 +14,11 @@ never rewrites it, so span-sequence equality holds by construction
 The derived fields mirror the reference signature preprocessing
 (s2and/data.py:542-641): normalized name (with and without apostrophes),
 honorific stripping (NAME_PREFIXES, s2and/text.py:243), first/middle/last
-split, and the S2 blocking key (text.py:632-653).
+split, the S2 blocking key (text.py:632-653), and the per-pair inputs
+the constraint gate and the featurizer compare: the middle-initial array
+and the distinct affiliation-token array (``mention_sets``). They are
+derived here, once per mention, so the pair stages only intersect arrays
+and never re-split strings on both sides of every pair.
 """
 
 from __future__ import annotations
@@ -63,8 +67,28 @@ def _strip_honorifics(tokens: Column, rounds: int = 2) -> Column:
     return out
 
 
+def _nonempty_tokens(col: Column) -> Column:
+    return F.filter(F.split(col, " "), lambda t: F.length(t) > 0)
+
+
+def mention_sets(suffix: str = "") -> list[Column]:
+    """``middle_initials`` and ``affil_tokens`` from the ``middle`` and
+    ``affil_norm`` columns (each name + ``suffix``): the first letter of
+    every non-empty middle token, and the distinct non-empty affiliation
+    tokens. ``suffix`` lets hand-built pair frames (``_1``/``_2``) derive
+    them the same way the mentions frame does."""
+    middle, affil = F.col("middle" + suffix), F.col("affil_norm" + suffix)
+    return [
+        F.transform(_nonempty_tokens(middle), lambda t: F.substring(t, 1, 1)).alias(
+            "middle_initials" + suffix
+        ),
+        F.array_distinct(_nonempty_tokens(affil)).alias("affil_tokens" + suffix),
+    ]
+
+
 def extract_mentions(docs: DataFrame, ascii_fast_path: bool = False) -> DataFrame:
-    """documents -> mentions frame with derived name fields + block key.
+    """documents -> mentions frame with derived name fields, block key and
+    the ``mention_sets`` arrays.
 
     ``ascii_fast_path=True`` skips the unicode-fold pandas UDF (pure JVM
     plan) — used by oracle-checked queries and safe whenever the corpus is
@@ -96,9 +120,7 @@ def extract_mentions(docs: DataFrame, ascii_fast_path: bool = False) -> DataFram
     ).drop("_ts")
 
     name_norm = norm(F.col("name_raw"), special_case_apostrophes=True)
-    toks = _strip_honorifics(
-        F.filter(F.split(name_norm, " "), lambda t: F.length(t) > 0)
-    )
+    toks = _strip_honorifics(_nonempty_tokens(name_norm))
     df = df.withColumn("_toks", toks)
     df = df.select(
         "*",
@@ -117,4 +139,8 @@ def extract_mentions(docs: DataFrame, ascii_fast_path: bool = False) -> DataFram
         .alias("last"),
         norm(F.col("affil_raw")).alias("affil_norm"),
     ).drop("_toks")
-    return df.withColumn("block_key", compute_block_key(F.col("name_norm")))
+    return df.select(
+        "*",
+        compute_block_key(F.col("name_norm")).alias("block_key"),
+        *mention_sets(),
+    )

@@ -37,27 +37,21 @@ def _suffix(df: DataFrame, suffix: str, key: str, extra: list[str] | None = None
     )
 
 
-def _canonical(pairs: DataFrame, id_col: str) -> DataFrame:
-    """Ensure sid1 < sid2 for every emitted pair (the reference's condensed
+def canonicalize_pairs(pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Ensure id_1 < id_2 for every pair (the reference's condensed
     upper-triangular layout, data.py:190-194, reduced to an ordering
-    convention in long format)."""
-    c1, c2 = F.col(id_col + "_1"), F.col(id_col + "_2")
-    swap = c1 > c2
-    out = pairs
-    base = [c[:-2] for c in pairs.columns if c.endswith("_1")]
-    for b in base:
-        out = out.withColumn(
-            f"__{b}_1", F.when(swap, F.col(b + "_2")).otherwise(F.col(b + "_1"))
-        ).withColumn(
-            f"__{b}_2", F.when(swap, F.col(b + "_1")).otherwise(F.col(b + "_2"))
-        )
-    for b in base:
-        out = (
-            out.drop(b + "_1", b + "_2")
-            .withColumnRenamed(f"__{b}_1", b + "_1")
-            .withColumnRenamed(f"__{b}_2", b + "_2")
-        )
-    return out
+    convention in long format). Swapping the ids swaps every _1/_2
+    suffixed column with it, in one projection."""
+    swapped = F.col(id_col + "_1") > F.col(id_col + "_2")
+    other = {"_1": "_2", "_2": "_1"}
+    return pairs.select(
+        *[
+            F.when(swapped, F.col(c[:-2] + other[c[-2:]])).otherwise(F.col(c)).alias(c)
+            if c[-2:] in other
+            else F.col(c)
+            for c in pairs.columns
+        ]
+    )
 
 
 def within_block_pairs(
@@ -142,7 +136,7 @@ def within_block_pairs(
     )
     # Cross-bucket pairs may arrive id-unordered; canonicalize (a no-op
     # for same-bucket and cold pairs, which are id-ordered already).
-    pairs = _canonical(pairs, id_col)
+    pairs = canonicalize_pairs(pairs, id_col)
     # ids are unique so self-pairs cannot occur; keep a cheap guard
     return pairs.where(F.col(id_col + "_1") != F.col(id_col + "_2"))
 

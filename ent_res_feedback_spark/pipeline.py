@@ -39,7 +39,11 @@ from ent_res_feedback_spark.operators.pairs import within_block_pairs
 from ent_res_feedback_spark.operators.scoring import score_pairs
 from ent_res_feedback_spark.oracle import DEFAULT_TAU, DEFAULT_WEIGHTS
 
-MENTION_COLS = ["doc_id", "block_key", "first", "middle", "last", "affil_norm"]
+#: the mention fields every pair builder carries onto its pairs; the two
+#: arrays come from ``mentions.mention_sets``, derived once per mention
+MENTION_COLS = [
+    "doc_id", "block_key", "first", "last", "middle_initials", "affil_tokens",
+]
 
 
 @dataclass
@@ -147,7 +151,10 @@ def run_pipeline(
     scored:   the pair-distance frame
     lineage:  per-block lineage/metrics table (lazy — costs nothing unless
               consumed)
-    metrics:  driver-side dict. Row/cluster counts are OPT-IN
+    metrics:  driver-side dict. ``wall_sec`` covers building the plan
+              plus materialising connected components (CC runs eagerly
+              here), NOT the clusters sink write, which the caller
+              performs afterwards. Row/cluster counts are OPT-IN
               (``compute_metrics=True``): each is a full extra job, and a
               mandatory stage barrier per run is exactly the fixed cost
               that caps scaling efficiency — production derives counts

@@ -10,12 +10,15 @@ Checks (grep over the formatted plan):
   - the pair self-join is a shuffle join keyed on block_key (+salt cols)
   - constraint evaluation sits BELOW the ArrowEvalPython (pandas UDF)
     node, i.e. constrained pairs never reach the featurizer
+  - no per-pair split over middle_1/2 or affil_norm_1/2: the mention sets
+    are derived once per mention, not on both sides of every pair
   - WholeStageCodegen spans cover the scalar feature expressions
 """
 
 from __future__ import annotations
 
 import io
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -206,6 +209,12 @@ def check(plans: dict[str, str]) -> list[str]:
     # conditions, so it can't be string-matched; its effect is asserted
     # behaviorally in tests/test_pipeline_e2e.py::test_constraints_gate_before_udf
     # (constrained pairs carry NULL score => never reached the featurizer).
+    # Middle initials and affiliation tokens are derived once per mention
+    # (mentions.mention_sets); a split over a suffixed pair column means
+    # every pair re-derives them on both sides again.
+    resplit = sorted(set(re.findall(r"split\(((?:middle|affil_norm)_[12])#", sp)))
+    if resplit:
+        problems.append(f"scored_pairs: per-pair split over {', '.join(resplit)}")
 
     # near-dup candidate dedup must shuffle ONLY the id pair: some
     # distinct-aggregate keys line lists both ids and no token array
@@ -275,11 +284,9 @@ def check(plans: dict[str, str]) -> list[str]:
     ts = plans["threshold_sweep"]
     # formatted plans list each node twice (tree + detail section) —
     # count distinct node ids
-    import re as _re
-
     n_fmg = len(
-        set(_re.findall(r"FlatMapGroupsInPandas \((\d+)\)", ts))
-        | set(_re.findall(r"\((\d+)\) FlatMapGroupsInPandas", ts))
+        set(re.findall(r"FlatMapGroupsInPandas \((\d+)\)", ts))
+        | set(re.findall(r"\((\d+)\) FlatMapGroupsInPandas", ts))
     )
     if n_fmg != 1:
         problems.append(

@@ -13,6 +13,50 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: Engine settings every session running this package wants, whatever
+#: its master: ``get_spark`` builds with them and the shipped jobs under
+#: ``jobs/`` apply them to spark-submit's builder (master, memory and
+#: shuffle partitions stay the caller's). Builder settings win over a
+#: spark-submit ``--conf`` of the same key.
+ENGINE_CONF = {
+    # Adaptive execution: runtime re-plan, small-partition coalesce,
+    # automatic skew-join splitting for the hot-block self-join.
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # SIZE-based coalescing, not parallelism-based: AQE's default
+    # parallelism-first mode coalesces every post-shuffle stage to
+    # ~1 partition per core, which quantizes pandas-UDF-heavy stages
+    # (featurization costs ~6.5 s/MB, so a 21 MB task is a ~135 s
+    # straggler; measured in BENCH/ANALYSIS.md "size-based AQE
+    # coalescing"). A small 2 MB advisory target keeps those stages
+    # at fine equal quanta — straggler loss bounded by one quantum —
+    # and leaves the deliberate shuffle-partition sizing alone
+    # (partitions above 2 MB are never merged), while genuinely tiny
+    # shuffles still coalesce. 2 MB beat 8 MB head-to-head in the
+    # 550k-doc probe (8-core arm 45.6s vs 65.6s: at 8 MB the heavy
+    # stage collapsed to 1 task/core, the exact quantization this
+    # setting removes). The quantum is data-sized, not cluster-sized,
+    # so the same setting holds from local[2] to a 1000-executor
+    # cluster; it also sets the skew-join split granularity.
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "2m",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Arrow batching for every pandas UDF / applyInPandas.
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    # Keep parquet scans prunable: one row-group sized split per task.
+    "spark.sql.files.maxPartitionBytes": "128m",
+    # No Python call-site capture per Column call. With it on (the
+    # Spark 4 default) every pyspark.sql.functions call makes an extra
+    # py4j round trip to record the caller's file:line: ~2.8k of the
+    # ~5.1k round trips one small documents -> clusters job made on
+    # its calling thread. The trade-off: an analysis or runtime error
+    # still carries its message and JVM context, but no longer names
+    # the Python file:line that built the failing expression.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
+}
+
+
 def get_spark(
     app_name: str = "ent-res-feedback-spark",
     cores: int | None = None,
@@ -45,35 +89,8 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # Adaptive execution: runtime re-plan, small-partition coalesce,
-        # automatic skew-join splitting for the hot-block self-join.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # SIZE-based coalescing, not parallelism-based: AQE's default
-        # parallelism-first mode coalesces every post-shuffle stage to
-        # ~1 partition per core, which quantizes pandas-UDF-heavy stages
-        # (featurization costs ~6.5 s/MB, so a 21 MB task is a ~135 s
-        # straggler; measured in BENCH/ANALYSIS.md "size-based AQE
-        # coalescing"). A small 2 MB advisory target keeps those stages
-        # at fine equal quanta — straggler loss bounded by one quantum —
-        # and leaves the deliberate shuffle-partition sizing alone
-        # (partitions above 2 MB are never merged), while genuinely tiny
-        # shuffles still coalesce. 2 MB beat 8 MB head-to-head in the
-        # 550k-doc probe (8-core arm 45.6s vs 65.6s: at 8 MB the heavy
-        # stage collapsed to 1 task/core, the exact quantization this
-        # setting removes). The quantum is data-sized, not cluster-sized,
-        # so the same setting holds from local[2] to a 1000-executor
-        # cluster; it also sets the skew-join split granularity.
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-                "false")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow batching for every pandas UDF / applyInPandas.
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config(map=ENGINE_CONF)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Keep parquet scans prunable: one row-group sized split per task.
-        .config("spark.sql.files.maxPartitionBytes", "128m")
         # Deterministic timestamps in tests.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

@@ -54,8 +54,13 @@ def main() -> int:
     args = p.parse_args()
 
     from ent_res_feedback_spark.pipeline import ERConfig, run_pipeline
+    from ent_res_feedback_spark.session import ENGINE_CONF
 
-    spark = SparkSession.builder.appName("ent-res-er").getOrCreate()
+    spark = (
+        SparkSession.builder.appName("ent-res-er")
+        .config(map=ENGINE_CONF)
+        .getOrCreate()
+    )
     spark.sparkContext.setLogLevel("WARN")
 
     docs = spark.read.parquet(args.input)

@@ -56,8 +56,13 @@ def main() -> int:
         pairwise_prf,
         v_measure,
     )
+    from ent_res_feedback_spark.session import ENGINE_CONF
 
-    spark = SparkSession.builder.appName("ent-res-eval").getOrCreate()
+    spark = (
+        SparkSession.builder.appName("ent-res-eval")
+        .config(map=ENGINE_CONF)
+        .getOrCreate()
+    )
     spark.sparkContext.setLogLevel("WARN")
 
     pred = spark.read.parquet(args.pred).select("doc_id", "cluster_id")

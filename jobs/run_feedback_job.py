@@ -42,8 +42,13 @@ def main() -> int:
     from ent_res_feedback_spark.operators.feedback import run_feedback_loop
     from ent_res_feedback_spark.operators.metrics import pairwise_prf
     from ent_res_feedback_spark.pipeline import ERConfig
+    from ent_res_feedback_spark.session import ENGINE_CONF
 
-    spark = SparkSession.builder.appName("ent-res-feedback-loop").getOrCreate()
+    spark = (
+        SparkSession.builder.appName("ent-res-feedback-loop")
+        .config(map=ENGINE_CONF)
+        .getOrCreate()
+    )
     spark.sparkContext.setLogLevel("WARN")
 
     docs = spark.read.parquet(args.input)

@@ -11,6 +11,7 @@ from ent_res_feedback_spark.operators.constraints import (
     join_alias_flags,
     load_name_aliases,
 )
+from ent_res_feedback_spark.operators.mentions import mention_sets
 
 PAIR_SCHEMA = (
     "doc_id_1 string, doc_id_2 string, "
@@ -23,13 +24,17 @@ def _pair(first_1, first_2, last="smith"):
     return ("d1", "d2", first_1, first_2, "", "", last, last, "", "")
 
 
+def _pairs(spark, rows):
+    return spark.createDataFrame(rows, PAIR_SCHEMA).select(
+        "*", *mention_sets("_1"), *mention_sets("_2")
+    )
+
+
 def test_alias_flips_disallow_to_model(spark):
     # NB the alias rule sits BELOW the first-initial rule in the chain
     # (reference data.py:850-866), so only same-initial non-prefix pairs
     # can be rescued by an alias — e.g. alec/alan, not bill/william.
-    pairs = spark.createDataFrame(
-        [_pair("alec", "alan"), _pair("anna", "amelia")], PAIR_SCHEMA
-    )
+    pairs = _pairs(spark, [_pair("alec", "alan"), _pair("anna", "amelia")])
     aliases = spark.createDataFrame(
         [("alan", "alec")], "name_1 string, name_2 string"
     )
@@ -43,7 +48,7 @@ def test_alias_flips_disallow_to_model(spark):
     # anna/amelia: non-prefix, no alias -> hard disallow
     assert got[("anna", "amelia")] == LARGE_DISTANCE
     # different first initials stay disallowed even when aliased
-    pairs2 = spark.createDataFrame([_pair("bill", "william")], PAIR_SCHEMA)
+    pairs2 = _pairs(spark, [_pair("bill", "william")])
     aliases2 = spark.createDataFrame(
         [("william", "bill")], "name_1 string, name_2 string"
     )
@@ -83,9 +88,8 @@ def test_alias_loader_csv_and_parquet(spark, tmp_path):
 def test_alias_does_not_bypass_other_constraints(spark):
     # aliased firsts but MISMATCHED last names: still disallowed (the
     # last-name rule precedes the alias rule in the chain)
-    pairs = spark.createDataFrame(
-        [_pair("bill", "william", last="smith")[:7] + ("jones",) + ("", "")],
-        PAIR_SCHEMA,
+    pairs = _pairs(
+        spark, [_pair("bill", "william", last="smith")[:7] + ("jones",) + ("", "")]
     )
     aliases = spark.createDataFrame(
         [("william", "bill")], "name_1 string, name_2 string"

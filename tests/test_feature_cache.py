@@ -12,6 +12,7 @@ from ent_res_feedback_spark.operators.features import (
     FEATURE_COLS,
     mention_pair_features,
 )
+from ent_res_feedback_spark.operators.mentions import mention_sets
 
 
 def _pairs(spark, rows):
@@ -20,7 +21,7 @@ def _pairs(spark, rows):
         "doc_id_1 string, doc_id_2 string, "
         "first_1 string, first_2 string, middle_1 string, middle_2 string, "
         "affil_norm_1 string, affil_norm_2 string",
-    )
+    ).select("*", *mention_sets("_1"), *mention_sets("_2"))
 
 
 ROWS = [
